@@ -13,6 +13,7 @@ the DataFrame front-end run against one catalog (SURVEY §3.2).
 
 from __future__ import annotations
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
@@ -209,10 +210,16 @@ def events_readstream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return normalize_events_ts(stream)
 
 
+# Error conditions Spark raises when a session does not let a conf be set
+# (a static conf, or one a managed platform locks).
+_CONF_LOCKED = {"CANNOT_MODIFY_CONFIG", "CANNOT_MODIFY_STATIC_CONFIG"}
+
+
 def ensure_runtime_conf(spark: SparkSession) -> None:
     """Defensive runtime confs for sessions the engine didn't build (e.g. the
     verify driver's): ns-parquet handling, UTC timezone (oracle parity —
-    DuckDB timestamps are UTC-naive), AQE. All dynamic SQLConfs."""
+    DuckDB timestamps are UTC-naive), AQE. All dynamic SQLConfs; a session
+    that locks one keeps its own value, and any other error surfaces."""
     for k, v in [
         ("spark.sql.legacy.parquet.nanosAsLong", "true"),
         ("spark.sql.session.timeZone", "UTC"),
@@ -221,8 +228,9 @@ def ensure_runtime_conf(spark: SparkSession) -> None:
     ]:
         try:
             spark.conf.set(k, v)
-        except Exception:
-            pass  # never fail a read over a tuning conf
+        except AnalysisException as e:
+            if e.getCondition() not in _CONF_LOCKED:
+                raise
 
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

@@ -16,6 +16,7 @@ readers get partition pruning.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def write_table(
@@ -36,11 +37,22 @@ def write_table(
 
 
 def read_table(
-    spark: SparkSession, path: str, fmt: str = "parquet", merge_schema: bool = False
+    spark: SparkSession,
+    path: str,
+    fmt: str = "parquet",
+    merge_schema: bool = False,
+    schema: StructType | None = None,
 ) -> DataFrame:
     """Catalog-free table read; ``merge_schema=True`` unions the schemas of
-    all part files (the read side of S6 schema evolution)."""
+    all part files (the read side of S6 schema evolution).
+
+    ``schema=`` pins the read schema instead of inferring it, which skips
+    the Spark job that reads part-file footers on every load. The caller
+    vouches that the files hold that schema: a file whose column types
+    differ fails when its rows are read, not at load."""
     reader = spark.read.format(fmt)
     if merge_schema:
         reader = reader.option("mergeSchema", "true")
+    if schema is not None:
+        reader = reader.schema(schema)
     return reader.load(path)

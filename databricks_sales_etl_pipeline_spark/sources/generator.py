@@ -3,9 +3,16 @@
 The reference generates rows in a driver-side Python loop
 (`01_project_setup_and_ingestion.py:56-76`, `03_scheduling_automation.py:29-68`)
 — O(n) on the driver, the #3 anti-pattern in SURVEY §4.3. Here generation is
-``spark.range(n)`` + pure column expressions: fully distributed, O(n/executors),
-scales to any row count (100 TB of synthetic data is just ``n=10^12`` with
-more partitions).
+``spark.range`` + pure column expressions: fully distributed, O(n/executors),
+scales to any row count (100 TB of synthetic data is just ``n=10^12``).
+
+Splits are sized by row count, not by the cluster: each split holds
+``ROWS_PER_SPLIT`` rows, about one ``session.TARGET_PARTITION_BYTES``
+partition at the generator's fixed row width. ``spark.range(n)`` alone
+would slice by ``defaultParallelism`` and write a 10k-row daily slice as one
+tiny parquet file per core, each paying the per-file commit cost; sized
+splits write it as one file, and a 10^12-row run still spreads over ~540k
+tasks.
 
 Determinism: no rand() — every attribute is a fixed modular-arithmetic
 function of the row id (exact int64 ops, reproducible in any engine), which
@@ -21,11 +28,20 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from databricks_sales_etl_pipeline_spark.registry import query
+from databricks_sales_etl_pipeline_spark.session import TARGET_PARTITION_BYTES
 
 CATEGORIES = ["Elettronica", "Abbigliamento", "Casa", "Sport", "Libri"]
 CITIES = ["Milano", "Roma", "Napoli", "Torino", "Bologna", "Firenze", "Palermo"]
 PAYMENTS = ["Carta di credito", "Contanti", "PayPal"]
 ANCHOR_DATE = "2024-01-01"  # explicit parameter — never datetime.now() (SURVEY §5.2.5)
+
+# Bytes of one generated row by the plan's size estimate, in its widest
+# written form (Bronze, order_date as a string): Spark scales range's 8 B
+# per id by the width of the row built from it, 8 × (8 + 6 × 20 + 2 × 8) /
+# (8 + 8) with 8-byte row headers and 20 B per string. Every column is
+# fixed by the formulas below, so the width is too.
+ROW_BYTES = 72
+ROWS_PER_SPLIT = TARGET_PARTITION_BYTES // ROW_BYTES  # 1,864,135
 
 
 def pad_id(col, width: int):
@@ -45,11 +61,13 @@ def gen_orders(
     anchor_date: str = ANCHOR_DATE,
     history_days: int = 90,
 ) -> DataFrame:
-    """Generate ``n`` synthetic orders, distributed, deterministic."""
+    """Generate ``n`` synthetic orders, distributed, deterministic, in
+    ceil(n / ``ROWS_PER_SPLIT``) splits."""
+    splits = max(1, -(-n // ROWS_PER_SPLIT))
     i = F.col("id")
     cat_idx = (i * 7) % len(CATEGORIES)
     price_cents = (i * 23456791) % 49001 + 1000  # 10.00 .. 500.00
-    return spark.range(n).select(
+    return spark.range(0, n, 1, splits).select(
         F.concat(F.lit("ORD_"), pad_id(i + start_id, 4)).alias("order_id"),
         F.concat(
             F.lit("CUST_"), pad_id((i * 2654435761) % n_customers + 1, 3)

@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import os
+import uuid
 
 import duckdb
 import pytest
@@ -27,3 +28,17 @@ def duck():
         )
     yield conn
     conn.close()
+
+
+def spark_jobs(spark, fn) -> int:
+    """Spark jobs that ``fn()`` launches, counted through a job group."""
+    sc = spark.sparkContext
+    group = f"test-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # job events arrive asynchronously
+    return len(sc.statusTracker().getJobIdsForGroup(group))

@@ -50,3 +50,29 @@ def test_medallion_roundtrip(eng, tmp_path):
     assert report["n_rows"] == 120
     m.daily(n_orders=5)
     assert m.monitor().count() > 0
+
+
+def test_ensure_runtime_conf_skips_only_locked_confs(spark):
+    """A conf the session will not let us set is left as it is; any other
+    error from setting one surfaces."""
+    from types import SimpleNamespace
+
+    from pyspark.errors import AnalysisException
+
+    from databricks_sales_etl_pipeline_spark.catalog import ensure_runtime_conf
+
+    def session_raising(exc):
+        def fail(key, value):
+            raise exc
+
+        return SimpleNamespace(conf=SimpleNamespace(set=fail))
+
+    with pytest.raises(AnalysisException) as locked:
+        spark.conf.set("spark.sql.warehouse.dir", "/elsewhere")  # a static conf
+    ensure_runtime_conf(session_raising(locked.value))
+
+    with pytest.raises(AnalysisException) as missing:
+        spark.table("no_such_table")
+    for exc in (missing.value, RuntimeError("conf service down")):
+        with pytest.raises(type(exc)):
+            ensure_runtime_conf(session_raising(exc))

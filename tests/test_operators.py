@@ -8,7 +8,13 @@ from pyspark.sql import functions as F
 from databricks_sales_etl_pipeline_spark.functions.money import cents, euros, money2
 from databricks_sales_etl_pipeline_spark.operators.dq import duplicate_keys, null_counts
 from databricks_sales_etl_pipeline_spark.extensions.dedup import shingles
-from databricks_sales_etl_pipeline_spark.sources.generator import gen_orders
+from databricks_sales_etl_pipeline_spark.plans.medallion import to_bronze_format
+from databricks_sales_etl_pipeline_spark.sources.generator import (
+    ROW_BYTES,
+    ROWS_PER_SPLIT,
+    gen_orders,
+)
+from tests.conftest import spark_jobs
 
 
 def test_cents_rounding(spark):
@@ -83,3 +89,17 @@ def test_generator_is_distributed_not_driver_loop(spark):
     # must be a spark.range plan, not a parallelized local collection
     plan = gen_orders(spark, n=10)._jdf.queryExecution().optimizedPlan().toString()
     assert "Range" in plan
+
+
+def test_generator_splits_sized_by_rows(spark):
+    def check():
+        for n in (1, 10_000, ROWS_PER_SPLIT, ROWS_PER_SPLIT + 1, 10**10):
+            assert gen_orders(spark, n=n).rdd.getNumPartitions() == -(-n // ROWS_PER_SPLIT)
+
+    assert spark_jobs(spark, check) == 0  # split counts come from planning alone
+
+
+def test_generator_row_bytes_is_the_plan_estimate(spark):
+    # the widest form the pipeline writes: Bronze keeps order_date as a string
+    plan = to_bronze_format(gen_orders(spark, n=1000))._jdf.queryExecution().optimizedPlan()
+    assert plan.stats().sizeInBytes() == 1000 * ROW_BYTES
