@@ -1,6 +1,14 @@
 """Deduplication operators (SURVEY §2.6 X1/X2 + BASELINE.json north star):
 exact, fingerprint, n-gram Jaccard, MinHash-LSH, SimHash — over ``documents``.
 
+Each hashed algorithm exists once, as a kernel that takes its hash as an
+argument: banded MinHash (``minhash_signatures`` → ``band_rows`` →
+``band_candidates``), SimHash (``simhash_sketch``) and winnowing
+(``winnow_fingerprints``). The production query passes xxhash64; its
+``_verified`` twin passes the md5-derived ``_h32`` hash, which DuckDB
+recomputes bit-identically. The oracle therefore checks the very pipeline
+production runs — the hash is the only thing that differs.
+
 Scale posture (the whole point of these at 100 TB):
 - exact dedup: one hash shuffle on the full text — fine, but fingerprint
   dedup (md5 first, group on the 16-byte digest) shuffles 16 bytes/row
@@ -162,6 +170,46 @@ def exact_jaccard_on_candidates(candidates: DataFrame, sh: DataFrame, t: float) 
     )
 
 
+def rare_first_prefix(sh: DataFrame, t: float) -> DataFrame:
+    """PPJoin prefix of each doc's shingle set for threshold t: its first
+    n_sh − ⌈t·n_sh⌉ + 1 shingles in the global rare-first order (ascending
+    document frequency, shingle tiebreak), as (doc_id, n_sh, shingle) rows.
+    Two sets with overlap ≥ ⌈t·|x|⌉ must share an element within these
+    prefixes, so a join on them loses no qualifying pair; hot shingles
+    sort last and stay out of the join."""
+    from pyspark.sql import Window
+
+    doc_freq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
+    rare_first = Window.partitionBy("doc_id").orderBy("df", "shingle")
+    return (
+        sh.join(doc_freq, "shingle")
+        .withColumn("rnk", F.row_number().over(rare_first))
+        .where(F.col("rnk") <= F.col("n_sh") - F.ceil(F.col("n_sh") * t) + 1)
+        .select("doc_id", "n_sh", "shingle")
+    )
+
+
+# ---- cross-engine hash: the md5 side of every _verified twin ----
+#
+# xxhash64 has no DuckDB twin, so the production sketches are rows-only.
+# The first 8 md5 hex chars parsed as an integer are computed bit-identically
+# by Spark (md5 + conv) and DuckDB (md5 + positional hex-digit sum); a
+# _verified twin passes this hash to the same kernel its production query
+# uses, so signature build, banding, bit votes and window minima are all
+# hash-checked, not just row-counted.
+
+_H32_SQL = (
+    "CAST(list_sum(list_transform(range(1, 9), i -> "
+    "(strpos('0123456789abcdef', substring(md5({expr}), CAST(i AS INT), 1)) - 1)"
+    " * CAST(power(16, 8 - i) AS BIGINT))) AS BIGINT)"
+)
+
+
+def _h32(col):
+    """First 8 md5 hex chars of col as a bigint — Spark side of _H32_SQL."""
+    return F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("bigint")
+
+
 _NGRAM_ORACLE = """
     WITH sh AS (
         SELECT doc_id, unnest(list_distinct(
@@ -207,25 +255,16 @@ def ext_dedup_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     t·|x| <= |y| <= |x|/t) prunes inside the join. Join rows carry only
     (doc_id, n_sh, shingle); no arrays cross the shuffle; integer counts →
     IEEE-deterministic jaccard → oracle-checkable."""
-    from pyspark.sql import Window
-
     t = 0.5
     d = load(spark, sf_dir, "documents")
     # lazy localCheckpoint: prefix build + both verify sides consume the
     # shingle pipeline — materialize it once instead of recomputing per branch
     sh = shingle_rows(d).localCheckpoint(eager=False)
-    doc_freq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
-    rare_first = Window.partitionBy("doc_id").orderBy("df", "shingle")
     # checkpoint the prefix relation (round-13): its a/b self-join clones
     # the plan and LogicalRDD leaves don't canonicalize equal across clones
     # (round-12 facts) — without it the df-join + rare-first window ran
     # once per branch
-    prefix = (
-        sh.join(doc_freq, "shingle")
-        .withColumn("rnk", F.row_number().over(rare_first))
-        .where(F.col("rnk") <= F.col("n_sh") - F.ceil(F.col("n_sh") * t) + 1)
-        .select("doc_id", "n_sh", "shingle")
-    ).localCheckpoint(eager=False)
+    prefix = rare_first_prefix(sh, t).localCheckpoint(eager=False)
     a = prefix.alias("a")
     b = prefix.alias("b")
     candidates = (
@@ -270,20 +309,13 @@ def ext_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 WINNOW_W = 4
 
 
-@query("ext_fingerprint_winnow")  # rows-only: xxhash64 k-gram hashes, no SQL twin
-def ext_fingerprint_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X1c — winnowing document fingerprints (the rolling-hash selection
-    scheme used by MOSS-style near-dup/plagiarism detection): hash every
-    3-word k-gram, slide a window of W consecutive positions, keep each
-    window's minimum hash, deduplicate. Guarantees: any shared run of
-    W+k-1 words between two documents yields at least one shared
-    fingerprint, while storing only ~2/(W+1) of all k-gram hashes.
-
-    Long-format dataflow: positional shingles → xxhash64 → min over a
-    sliding ROWS window per doc — all codegen'd, one doc_id shuffle."""
+def winnow_fingerprints(d: DataFrame, gram_hash) -> DataFrame:
+    """Winnowing over documents ``d``: ``gram_hash`` (Column → Column) hashes
+    every positional 3-word gram, each sliding window of WINNOW_W grams
+    keeps its minimum, and the distinct minima are counted per doc →
+    (doc_id, n_fingerprints, min_fingerprint)."""
     from pyspark.sql import Window
 
-    d = load(spark, sf_dir, "documents")
     words = d.select(
         "doc_id", F.posexplode(F.split(F.lower("text"), r"\s+")).alias("pos", "w")
     )
@@ -293,7 +325,7 @@ def ext_fingerprint_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
         words.select(
             "doc_id",
             "pos",
-            F.xxhash64(F.concat_ws(" ", F.col("w"), l1, l2)).alias("h"),
+            gram_hash(F.concat_ws(" ", F.col("w"), l1, l2)).alias("h"),
             l2.isNotNull().alias("_full"),
         )
         .where("_full")
@@ -308,50 +340,68 @@ def ext_fingerprint_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-N_TABLES = 8
+@query("ext_fingerprint_winnow")  # rows-only: xxhash64 k-gram hashes, no SQL twin
+def ext_fingerprint_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """X1c — winnowing document fingerprints (the rolling-hash selection
+    scheme used by MOSS-style near-dup/plagiarism detection): hash every
+    3-word k-gram, slide a window of W consecutive positions, keep each
+    window's minimum hash, deduplicate. Guarantees: any shared run of
+    W+k-1 words between two documents yields at least one shared
+    fingerprint, while storing only ~2/(W+1) of all k-gram hashes.
+
+    Long-format dataflow: positional shingles → xxhash64 → min over a
+    sliding ROWS window per doc — all codegen'd, one doc_id shuffle."""
+    return winnow_fingerprints(load(spark, sf_dir, "documents"), F.xxhash64)
 
 
-@query("ext_dedup_minhash_native")  # rows-only: hash-based candidates, no SQL twin
-def ext_dedup_minhash_native(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X2b' — banded MinHash built from JVM built-ins only (no pyspark.ml):
-    8 independent min-hashes per doc (xxhash64 seeded by table index, one
-    aggregation pass), candidates = pairs sharing any minhash (r=1, b=8 →
-    P(candidate | J=0.5) = 1-(1-J)^8 ≈ 99.6%), then EXACT Jaccard verify via
-    array_intersect. Deterministic (xxhash64 is seed-stable) → stable row
-    count for the rows-only check. ~10× faster than the pyspark.ml
-    MinHashLSH route at sf0.1 and shuffles 8 longs per doc instead of
-    sparse vectors."""
-    t = 0.5
-    d = load(spark, sf_dir, "documents")
-    # shared by signature build + both sides of the verify join — checkpoint
-    # the codegen'd long-format shingle pipeline once
-    sh = shingle_rows(d).localCheckpoint(eager=False)
-    # checkpoint the signature table too (round-13): the bands self-join
-    # clones the plan, and a LogicalRDD leaf never canonicalizes equal
-    # across the clone (round-12 exchange-reuse facts) — without this the
-    # 8×min-xxhash64 aggregation over every shingle ran TWICE, once per
-    # branch (profiled as two ~equal sig-agg stages). Signatures are 9
-    # longs per doc — the bounded-artifact scale class, cheap to hold.
-    sig = sh.groupBy("doc_id").agg(
-        *[
-            F.min(F.xxhash64(F.lit(j), F.col("shingle"))).alias(f"h{j}")
-            for j in range(N_TABLES)
-        ]
+#: bands (r=1 row each) of the banded-MinHash signature.
+N_BANDS = 8
+
+
+def xxhash_band_hash(j: int):
+    """Production band hash of the ``shingle`` column: xxhash64 seeded by j."""
+    return F.xxhash64(F.lit(j), F.col("shingle"))
+
+
+def md5_band_hash(j: int):
+    """Oracle band hash of the ``shingle`` column: _h32(f"{j}:" ‖ shingle)."""
+    return _h32(F.concat(F.lit(f"{j}:"), F.col("shingle")))
+
+
+def minhash_signatures(sh: DataFrame, band_hash) -> DataFrame:
+    """(doc_id, h0..h7): per band j, the minimum ``band_hash(j)`` over the
+    doc's shingle rows, in one aggregation pass. The result is lazily
+    checkpointed (round-13): the bands self-join clones the plan, and a
+    LogicalRDD leaf never canonicalizes equal across the clone (round-12
+    exchange-reuse facts) — without it the aggregation over every shingle
+    ran once per branch. Signatures are 9 longs per doc — the
+    bounded-artifact scale class, cheap to hold. ``sh`` itself is not
+    checkpointed here: callers that reuse it checkpoint it themselves."""
+    return sh.groupBy("doc_id").agg(
+        *[F.min(band_hash(j)).alias(f"h{j}") for j in range(N_BANDS)]
     ).localCheckpoint(eager=False)
-    bands = sig.select(
+
+
+def band_rows(sig: DataFrame) -> DataFrame:
+    """Long-format (doc_id, band, h) rows of a signature table."""
+    return sig.select(
         "doc_id",
         F.explode(
             F.array(
                 *[
                     F.struct(F.lit(j).alias("band"), F.col(f"h{j}").alias("h"))
-                    for j in range(N_TABLES)
+                    for j in range(N_BANDS)
                 ]
             )
         ).alias("bh"),
     ).select("doc_id", F.col("bh.band").alias("band"), F.col("bh.h").alias("h"))
+
+
+def band_candidates(bands: DataFrame) -> DataFrame:
+    """Distinct (doc_a, doc_b) pairs, doc_a < doc_b, sharing a band bucket."""
     a = bands.alias("a")
     b = bands.alias("b")
-    candidates = (
+    return (
         a.join(
             b,
             (F.col("a.band") == F.col("b.band"))
@@ -361,12 +411,36 @@ def ext_dedup_minhash_native(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
         .distinct()
     )
+
+
+def _banded_minhash(spark: SparkSession, sf_dir: str, band_hash) -> DataFrame:
+    """Near-dup pairs (doc_a, doc_b, jaccard >= 0.5) of banded MinHash —
+    the one pipeline behind ext_dedup_minhash_native and its md5 twin."""
+    t = 0.5
+    d = load(spark, sf_dir, "documents")
+    # shared by signature build + both sides of the verify join — checkpoint
+    # the codegen'd long-format shingle pipeline once
+    sh = shingle_rows(d).localCheckpoint(eager=False)
+    candidates = band_candidates(band_rows(minhash_signatures(sh, band_hash)))
     # exact verify on the (small) candidate set via count-join — long-format
     # rows, no arrays, no higher-order functions
     return exact_jaccard_on_candidates(candidates, sh, t)
 
 
-_MINHASH_VERIFIED_ORACLE = """
+@query("ext_dedup_minhash_native")  # rows-only: hash-based candidates, no SQL twin
+def ext_dedup_minhash_native(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """X2b' — banded MinHash built from JVM built-ins only (no pyspark.ml):
+    8 independent min-hashes per doc (xxhash64 seeded by table index, one
+    aggregation pass), candidates = pairs sharing any minhash (r=1, b=8 →
+    P(candidate | J=0.5) = 1-(1-J)^8 ≈ 99.6%), then EXACT Jaccard verify
+    by count-join. Deterministic (xxhash64 is seed-stable) → stable row
+    count for the rows-only check. ~10× faster than the pyspark.ml
+    MinHashLSH route at sf0.1 and shuffles 8 longs per doc instead of
+    sparse vectors."""
+    return _banded_minhash(spark, sf_dir, xxhash_band_hash)
+
+
+_MINHASH_VERIFIED_ORACLE = f"""
     WITH sh AS (
         SELECT doc_id, unnest(list_distinct(
             list_transform(
@@ -385,7 +459,7 @@ _MINHASH_VERIFIED_ORACLE = """
                                 substring(md5(CAST(b AS VARCHAR) || ':' || shingle),
                                           CAST(i AS INT), 1)) - 1)
                         * CAST(power(16, 8 - i) AS BIGINT))) AS BIGINT)) AS h
-        FROM sh, unnest(range(0, 8)) AS t(b)
+        FROM sh, unnest(range(0, {N_BANDS})) AS t(b)
         GROUP BY doc_id, b
     ), cand AS (
         SELECT DISTINCT a.doc_id AS doc_a, c.doc_id AS doc_b
@@ -410,61 +484,48 @@ _MINHASH_VERIFIED_ORACLE = """
 def ext_dedup_minhash_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X2b'' — banded MinHash with a FULL DuckDB oracle (round-2 judge ask:
     the xxhash64 variant's candidate generation was verification-blind).
-    Identical pipeline shape to ext_dedup_minhash_native — 8 per-band
-    min-hashes per doc, candidates = pairs sharing any band minimum, exact
-    Jaccard verify >= 0.5 — but the band hash is the first 8 hex chars of
-    md5(f"{band}:{shingle}") parsed as an integer, which Spark (md5 + conv)
-    and DuckDB (md5 + positional hex-digit sum) compute bit-identically, so
-    signature build, banding, candidate generation AND verify are all
-    hash-checked, not just row-counted.
+    The same pipeline as ext_dedup_minhash_native with the md5 band hash
+    (``md5_band_hash``), so signature build, banding, candidate generation
+    AND verify are all hash-checked, not just row-counted. md5 is ~2×
+    slower per call than xxhash64 — production uses the native variant."""
+    return _banded_minhash(spark, sf_dir, md5_band_hash)
 
-    Scale: same as the native variant — signatures are 8 longs per doc
-    built in one aggregation pass over the codegen'd long-format shingles;
-    the candidate join is band-bucketed (never all-pairs); exact verify
-    touches only candidates. md5 is ~2× slower per call than xxhash64 —
-    production uses the native variant; this one exists to prove the
-    algorithm exact end-to-end."""
-    t = 0.5
-    n_bands = 8
-    d = load(spark, sf_dir, "documents")
-    sh = shingle_rows(d).localCheckpoint(eager=False)
 
-    def band_hash(j: int):
-        return F.conv(
-            F.substring(F.md5(F.concat(F.lit(f"{j}:"), F.col("shingle"))), 1, 8),
-            16,
-            10,
-        ).cast("bigint")
-
-    # same sig checkpoint as the native variant: the bands self-join would
-    # otherwise run the 8×min-md5 aggregation once per branch
-    sig = sh.groupBy("doc_id").agg(
-        *[F.min(band_hash(j)).alias(f"h{j}") for j in range(n_bands)]
-    ).localCheckpoint(eager=False)
-    bands = sig.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(j).alias("band"), F.col(f"h{j}").alias("h"))
-                    for j in range(n_bands)
-                ]
-            )
-        ).alias("bh"),
-    ).select("doc_id", F.col("bh.band").alias("band"), F.col("bh.h").alias("h"))
-    a = bands.alias("a")
-    b = bands.alias("b")
-    candidates = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.h") == F.col("b.h"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
+def simhash_sketch(d: DataFrame, token_hash, bits: int) -> DataFrame:
+    """SimHash over documents ``d`` → (doc_id, simhash): ``token_hash``
+    (Column → Column) hashes every non-empty lowercased token, each of the
+    low ``bits`` hash bits gets a signed vote per token occurrence, and the
+    bits with a positive vote sum compose one BIGINT. Long-format tokens →
+    ONE groupBy(doc_id) carrying ``bits`` integer sums (map-side
+    combined); no arrays, no HOFs in the hot path."""
+    tok = d.select(
+        "doc_id", F.explode(F.split(F.lower("text"), r"\s+")).alias("tok")
+    ).where(F.col("tok") != "")
+    votes = (
+        tok.select("doc_id", token_hash(F.col("tok")).alias("h"))
+        .groupBy("doc_id")
+        .agg(
+            *[
+                F.sum(
+                    F.when(F.shiftright(F.col("h"), b).bitwiseAND(1) == 1, 1)
+                    .otherwise(-1)
+                ).alias(f"s{b}")
+                for b in range(bits)
+            ]
         )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
     )
-    return exact_jaccard_on_candidates(candidates, sh, t)
+    # bit 63 is the sign bit: 1 << 63 is not a long literal
+    sketch = sum(
+        [
+            F.when(
+                F.col(f"s{b}") > 0,
+                F.lit(-(1 << 63) if b == 63 else 1 << b).cast("bigint"),
+            ).otherwise(F.lit(0).cast("bigint"))
+            for b in range(bits)
+        ],
+        F.lit(0).cast("bigint"),
+    )
+    return votes.select("doc_id", sketch.alias("simhash"))
 
 
 @query("ext_dedup_simhash")  # rows-only: xxhash64 has no DuckDB twin
@@ -472,28 +533,7 @@ def ext_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X2c — 64-bit SimHash: per-token xxhash64, signed bit-vote per bit
     position, sign → sketch bits. One bigint per document; near-dups differ
     in a few bits (hamming). Built-ins only (explode + bitwise ops), no UDF."""
-    d = load(spark, sf_dir, "documents")
-    tok = d.select(
-        "doc_id", F.explode(F.split(F.lower("text"), r"\s+")).alias("token")
-    ).where(F.col("token") != "")
-    h = tok.select("doc_id", F.xxhash64("token").alias("h"))
-    votes = h.select(
-        "doc_id",
-        *[
-            (F.when(F.shiftright(F.col("h"), b).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)).alias(
-                f"b{b}"
-            )
-            for b in range(64)
-        ],
-    ).groupBy("doc_id").agg(*[F.sum(f"b{b}").alias(f"b{b}") for b in range(64)])
-    sketch = votes.select(
-        "doc_id",
-        sum(
-            [F.when(F.col(f"b{b}") > 0, F.lit(1).cast("long") * (1 << b) if b < 63 else F.lit(-(1 << 63)).cast("long")).otherwise(F.lit(0).cast("long")) for b in range(64)],
-            F.lit(0).cast("long"),
-        ).alias("simhash"),
-    )
-    return sketch
+    return simhash_sketch(load(spark, sf_dir, "documents"), F.xxhash64, 64)
 
 
 _DECON_FP = "md5(lower(regexp_replace(text, '\\s+', ' ', 'g')))"
@@ -646,6 +686,18 @@ def min_label_components(pairs: DataFrame, max_rounds: int = 20) -> DataFrame:
     return labels
 
 
+def dup_clusters(pairs: DataFrame) -> DataFrame:
+    """(cluster_id, n_members, keeper) of the connected components of a
+    (doc_a, doc_b) near-dup pair graph, clusters of size >= 2 only."""
+    labels = min_label_components(pairs.select("doc_a", "doc_b"))
+    return (
+        labels.groupBy(F.col("label").alias("cluster_id"))
+        .agg(F.count(F.lit(1)).alias("n_members"))
+        .where(F.col("n_members") >= 2)
+        .select("cluster_id", "n_members", F.col("cluster_id").alias("keeper"))
+    )
+
+
 @query("ext_dup_clusters")  # rows-only: iterative fixpoint, no single SQL twin
 def ext_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X2e — duplicate CLUSTERS: connected components over the near-dup
@@ -666,14 +718,7 @@ def ext_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     Output: (cluster_id = min doc_id, n_members, keeper = cluster_id),
     clusters of size >= 2 only. Deterministic given the pair graph →
     stable row count for the rows-only check."""
-    pairs = ext_dedup_minhash_native(spark, sf_dir).select("doc_a", "doc_b")
-    labels = min_label_components(pairs)
-    return (
-        labels.groupBy(F.col("label").alias("cluster_id"))
-        .agg(F.count(F.lit(1)).alias("n_members"))
-        .where(F.col("n_members") >= 2)
-        .select("cluster_id", "n_members", F.col("cluster_id").alias("keeper"))
-    )
+    return dup_clusters(ext_dedup_minhash_native(spark, sf_dir))
 
 
 _DUP_CLUSTERS_ORACLE = f"""
@@ -706,38 +751,10 @@ def ext_dup_clusters_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
     min-label-propagation loop is hash-verified end-to-end against an
     independent fixpoint formulation, clusters, sizes and keepers alike.
 
-    Same scale shape as ext_dup_clusters: banded candidates (never
-    all-pairs), join+groupBy rounds bounded by component diameter with
-    localCheckpoint lineage truncation."""
-    pairs = ext_dedup_minhash_verified(spark, sf_dir).select("doc_a", "doc_b")
-    labels = min_label_components(pairs)
-    return (
-        labels.groupBy(F.col("label").alias("cluster_id"))
-        .agg(F.count(F.lit(1)).alias("n_members"))
-        .where(F.col("n_members") >= 2)
-        .select("cluster_id", "n_members", F.col("cluster_id").alias("keeper"))
-    )
-
-
-# ---- round 3: md5-bit-identical twins for the xxhash64 sketch ops ----
-#
-# Same trick as ext_dedup_minhash_verified: xxhash64 has no DuckDB twin, so
-# the production sketches (ext_dedup_simhash / ext_fingerprint_winnow) are
-# rows-only; these variants derive the hash from md5 — computable
-# bit-identically in both engines — so the ENTIRE sketch construction is
-# hash-checked, proving the algorithm (bit votes / rolling window minima)
-# exact, not just non-crashing.
-
-_H32_SQL = (
-    "CAST(list_sum(list_transform(range(1, 9), i -> "
-    "(strpos('0123456789abcdef', substring(md5({expr}), CAST(i AS INT), 1)) - 1)"
-    " * CAST(power(16, 8 - i) AS BIGINT))) AS BIGINT)"
-)
-
-
-def _h32(col):
-    """First 8 md5 hex chars of col as a bigint — Spark side of _H32_SQL."""
-    return F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("bigint")
+    Same body as ext_dup_clusters (``dup_clusters``): banded candidates
+    (never all-pairs), join+groupBy rounds bounded by component diameter
+    with localCheckpoint lineage truncation."""
+    return dup_clusters(ext_dedup_minhash_verified(spark, sf_dir))
 
 
 def _simhash_oracle() -> str:
@@ -778,29 +795,14 @@ def ext_dedup_simhash_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
     xxhash64 64-bit variant (ext_dedup_simhash) stays as the faster
     production path.
 
-    Scale: long-format tokens → ONE groupBy(doc_id) carrying 32 integer
-    sums (map-side combined); no arrays, no HOFs in the hot path."""
-    d = load(spark, sf_dir, "documents")
-    tok = d.select(
-        "doc_id", F.explode(F.split(F.lower("text"), r"\s+")).alias("tok")
-    ).where(F.col("tok") != "")
-    h = _h32(F.concat(F.lit("sh:"), F.col("tok")))
-    hh = tok.select("doc_id", h.alias("h"))
-    votes = hh.groupBy("doc_id").agg(
-        *[
-            F.sum(
-                F.when(F.shiftright(F.col("h"), b).bitwiseAND(1) == 1, 1).otherwise(-1)
-            ).alias(f"s{b}")
-            for b in range(32)
-        ]
+    Same kernel as ext_dedup_simhash (``simhash_sketch``) with the md5
+    token hash and 32 bits."""
+    sketch = simhash_sketch(
+        load(spark, sf_dir, "documents"),
+        lambda tok: _h32(F.concat(F.lit("sh:"), tok)),
+        32,
     )
-    sketch = None
-    for b in range(32):
-        term = F.when(F.col(f"s{b}") > 0, F.lit(1 << b).cast("bigint")).otherwise(
-            F.lit(0).cast("bigint")
-        )
-        sketch = term if sketch is None else sketch + term
-    return votes.select("doc_id", sketch.alias("simhash32"))
+    return sketch.withColumnRenamed("simhash", "simhash32")
 
 
 _WINNOW_VERIFIED_ORACLE = f"""
@@ -835,37 +837,14 @@ _WINNOW_VERIFIED_ORACLE = f"""
 
 @query("ext_fingerprint_winnow_verified", oracle=_WINNOW_VERIFIED_ORACLE)
 def ext_fingerprint_winnow_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X1c' — ORACLE-CHECKED winnowing: identical rolling-min fingerprint
-    selection to ext_fingerprint_winnow but with md5-derived 32-bit k-gram
-    hashes, so DuckDB recomputes the same window minima and the selection
+    """X1c' — ORACLE-CHECKED winnowing: ext_fingerprint_winnow's kernel
+    (``winnow_fingerprints``) with md5-derived 32-bit k-gram hashes, so
+    DuckDB recomputes the same window minima and the selection
     scheme itself (every-window-min, dedup, per-doc accounting) is
     hash-verified across engines."""
-    from pyspark.sql import Window
-
-    d = load(spark, sf_dir, "documents")
-    words = d.select(
-        "doc_id", F.posexplode(F.split(F.lower("text"), r"\s+")).alias("pos", "w")
-    )
-    seq = Window.partitionBy("doc_id").orderBy("pos")
-    l1, l2 = F.lead("w", 1).over(seq), F.lead("w", 2).over(seq)
-    grams = (
-        words.select(
-            "doc_id",
-            "pos",
-            _h32(
-                F.concat(F.lit("wg:"), F.concat_ws(" ", F.col("w"), l1, l2))
-            ).alias("kh"),
-            l2.isNotNull().alias("_full"),
-        )
-        .where("_full")
-    )
-    win = seq.rowsBetween(0, WINNOW_W - 1)
-    picked = grams.select(
-        "doc_id", F.min("kh").over(win).alias("fingerprint")
-    )
-    return picked.groupBy("doc_id").agg(
-        F.countDistinct("fingerprint").alias("n_fingerprints"),
-        F.min("fingerprint").alias("min_fingerprint"),
+    return winnow_fingerprints(
+        load(spark, sf_dir, "documents"),
+        lambda gram: _h32(F.concat(F.lit("wg:"), gram)),
     )
 
 
@@ -1037,7 +1016,7 @@ def ext_contamination_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_MINHASH_CALIBRATION_ORACLE = """
+_MINHASH_CALIBRATION_ORACLE = f"""
     WITH sh AS (
         SELECT doc_id, unnest(list_distinct(
             list_transform(
@@ -1056,7 +1035,7 @@ _MINHASH_CALIBRATION_ORACLE = """
                                 substring(md5(CAST(b AS VARCHAR) || ':' || shingle),
                                           CAST(i AS INT), 1)) - 1)
                         * CAST(power(16, 8 - i) AS BIGINT))) AS BIGINT)) AS h
-        FROM sh, unnest(range(0, 8)) AS t(b)
+        FROM sh, unnest(range(0, {N_BANDS})) AS t(b)
         GROUP BY doc_id, b
     ), cand AS (
         SELECT DISTINCT a.doc_id AS doc_a, c.doc_id AS doc_b
@@ -1075,7 +1054,7 @@ _MINHASH_CALIBRATION_ORACLE = """
         GROUP BY cand.doc_a, cand.doc_b
     )
     SELECT m.doc_a, m.doc_b, m.n_bands_match,
-           CAST(m.n_bands_match AS DOUBLE) / 8 AS est_jaccard,
+           CAST(m.n_bands_match AS DOUBLE) / {N_BANDS} AS est_jaccard,
            CAST(co.n_common AS DOUBLE) / (sa.n_sh + sb.n_sh - co.n_common)
                AS exact_jaccard
     FROM matches m
@@ -1091,98 +1070,49 @@ def ext_minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair, the MinHash estimate of Jaccard (matching bands / 8) next to the
     exact Jaccard — the table you read before trusting an LSH index's
     threshold at corpus scale (is est ≈ exact? where does banding
-    over-recall?). Same md5 band hash as the fully-oracled dedup variant,
-    so estimate AND ground truth are hash-checked.
+    over-recall?). Built by the banded-MinHash kernels with the md5 band
+    hash, like ext_dedup_minhash_verified, so estimate AND ground truth
+    are hash-checked.
 
     Scale: signatures in one aggregation pass; candidates band-bucketed;
     the exact side touches candidates only (same bound as the dedup path).
     """
     from pyspark.sql.functions import broadcast
 
-    n_bands = 8
     d = load(spark, sf_dir, "documents")
     sh = shingle_rows(d).localCheckpoint(eager=False)
-
-    def band_hash(j: int):
-        return F.conv(
-            F.substring(F.md5(F.concat(F.lit(f"{j}:"), F.col("shingle"))), 1, 8),
-            16,
-            10,
-        ).cast("bigint")
-
-    # sig checkpoint (round-13): FOUR consumers (bands self-join ×2, sig_a,
-    # sig_b) and a LogicalRDD leaf never canonicalizes equal across plan
-    # clones — without it the 8×min-md5 aggregation ran once per consumer
-    sig = sh.groupBy("doc_id").agg(
-        *[F.min(band_hash(j)).alias(f"h{j}") for j in range(n_bands)]
-    ).localCheckpoint(eager=False)
-    bands = sig.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(j).alias("band"), F.col(f"h{j}").alias("h"))
-                    for j in range(n_bands)
-                ]
-            )
-        ).alias("bh"),
-    ).select("doc_id", F.col("bh.band").alias("band"), F.col("bh.h").alias("h"))
-    a = bands.alias("a")
-    b = bands.alias("b")
-    candidates = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.h") == F.col("b.h"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
+    sig = minhash_signatures(sh, md5_band_hash)
+    candidates = band_candidates(band_rows(sig))
     sig_a = sig.select(
         F.col("doc_id").alias("doc_a"),
-        *[F.col(f"h{j}").alias(f"a{j}") for j in range(n_bands)],
+        *[F.col(f"h{j}").alias(f"a{j}") for j in range(N_BANDS)],
     )
     sig_b = sig.select(
         F.col("doc_id").alias("doc_b"),
-        *[F.col(f"h{j}").alias(f"b{j}") for j in range(n_bands)],
+        *[F.col(f"h{j}").alias(f"b{j}") for j in range(N_BANDS)],
     )
     n_match = sum(
         [
             F.when(F.col(f"a{j}") == F.col(f"b{j}"), 1).otherwise(0)
-            for j in range(n_bands)
+            for j in range(N_BANDS)
         ],
         F.lit(0),
     ).cast("long")
     est = candidates.join(sig_a, "doc_a").join(sig_b, "doc_b").select(
         "doc_a", "doc_b", n_match.alias("n_bands_match")
     )
-    ra = sh.select(
-        F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("size_a"), "shingle"
-    )
-    rb = sh.select(
-        F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("size_b"), "shingle"
-    )
-    # broadcast ONLY the bounded candidate list into the first join; cand_a
-    # (candidate pairs × doc_a's full shingle set) is corpus-proportional, so
-    # the second join's strategy is left to the planner/AQE — a forced
-    # broadcast there bypasses autoBroadcastJoinThreshold and is a driver OOM
-    # at production corpus scale (r13 verdict "What's wrong" #1)
-    cand_a = broadcast(candidates).join(ra, "doc_a")
-    common = (
-        rb.join(cand_a, ["doc_b", "shingle"])
-        .groupBy("doc_a", "doc_b", "size_a", "size_b")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    exact = F.col("n_common").cast("double") / (
-        F.col("size_a") + F.col("size_b") - F.col("n_common")
-    )
-    return est.join(common, ["doc_a", "doc_b"]).select(
+    # broadcast ONLY the bounded candidate list into the exact side's first
+    # join; the candidates × doc_a-shingles relation is corpus-proportional,
+    # so the second join's strategy is left to the planner/AQE — a forced
+    # broadcast there bypasses autoBroadcastJoinThreshold and is a driver
+    # OOM at production corpus scale (r13 verdict "What's wrong" #1)
+    exact = exact_jaccard_on_candidates(broadcast(candidates), sh, 0.0)
+    return est.join(exact, ["doc_a", "doc_b"]).select(
         "doc_a",
         "doc_b",
         "n_bands_match",
-        (F.col("n_bands_match").cast("double") / 8).alias("est_jaccard"),
-        exact.alias("exact_jaccard"),
+        (F.col("n_bands_match").cast("double") / N_BANDS).alias("est_jaccard"),
+        F.col("jaccard").alias("exact_jaccard"),
     )
 
 

@@ -42,7 +42,13 @@ from pyspark.sql import functions as F
 
 from databricks_sales_etl_pipeline_spark.catalog import load
 from databricks_sales_etl_pipeline_spark.extensions.dedup import (
+    N_BANDS,
+    band_candidates,
+    band_rows,
     exact_jaccard_on_candidates,
+    md5_band_hash,
+    minhash_signatures,
+    rare_first_prefix,
     shingle_rows,
 )
 from databricks_sales_etl_pipeline_spark.functions import par
@@ -330,7 +336,6 @@ def ext_dedup_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: band buckets holding more than this many documents are dropped from
 #: candidate generation and reported instead.
 HOT_BAND_CAP = 16
-_N_BANDS = 8
 
 _GUARDED_ORACLE = f"""
     WITH sh AS (
@@ -351,7 +356,7 @@ _GUARDED_ORACLE = f"""
                                 substring(md5(CAST(b AS VARCHAR) || ':' || shingle),
                                           CAST(i AS INT), 1)) - 1)
                         * CAST(power(16, 8 - i) AS BIGINT))) AS BIGINT)) AS h
-        FROM sh, unnest(range(0, {_N_BANDS})) AS t(b)
+        FROM sh, unnest(range(0, {N_BANDS})) AS t(b)
         GROUP BY doc_id, b
     ), pop AS (
         SELECT b, h, CAST(COUNT(*) AS BIGINT) AS bucket_pop
@@ -392,9 +397,9 @@ _GUARDED_ORACLE = f"""
 
 @query("ext_dedup_minhash_guarded", oracle=_GUARDED_ORACLE)
 def ext_dedup_minhash_guarded(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X2b''' — banded MinHash with a HOT-BAND GUARD: identical signature /
-    banding / exact-verify pipeline to `ext_dedup_minhash_verified`
-    (md5-band hash, bit-identical in Spark and DuckDB), but band buckets
+    """X2b''' — banded MinHash with a HOT-BAND GUARD: the signature /
+    banding / candidate kernels of `ext_dedup_minhash_verified` with its
+    md5 band hash (bit-identical in Spark and DuckDB), but band buckets
     with more than HOT_BAND_CAP documents are excluded from the candidate
     self-join and emitted as `kind='hot_band'` report rows beside the
     `kind='pair'` results. On a boilerplate-heavy corpus the unguarded
@@ -405,48 +410,13 @@ def ext_dedup_minhash_guarded(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = 0.5
     d = load(spark, sf_dir, "documents")
     sh = shingle_rows(d).localCheckpoint(eager=False)
-
-    def band_hash(j: int):
-        return F.conv(
-            F.substring(F.md5(F.concat(F.lit(f"{j}:"), F.col("shingle"))), 1, 8),
-            16,
-            10,
-        ).cast("bigint")
-
-    sig = sh.groupBy("doc_id").agg(
-        *[F.min(band_hash(j)).alias(f"h{j}") for j in range(_N_BANDS)]
-    )
-    bands = sig.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(j).cast("bigint").alias("band"),
-                        F.col(f"h{j}").alias("h"),
-                    )
-                    for j in range(_N_BANDS)
-                ]
-            )
-        ).alias("bh"),
-    ).select("doc_id", F.col("bh.band").alias("band"), F.col("bh.h").alias("h"))
+    bands = band_rows(minhash_signatures(sh, md5_band_hash))
     pop = bands.groupBy("band", "h").agg(
         F.count(F.lit(1)).alias("bucket_pop")
     )
     hot = pop.where(F.col("bucket_pop") > HOT_BAND_CAP)
     kept = bands.join(hot.select("band", "h"), ["band", "h"], "left_anti")
-    a = kept.alias("a")
-    b = kept.alias("b")
-    candidates = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.h") == F.col("b.h"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
+    candidates = band_candidates(kept)
     pairs = exact_jaccard_on_candidates(candidates, sh, t).select(
         F.lit("pair").alias("kind"),
         "doc_a",
@@ -460,7 +430,7 @@ def ext_dedup_minhash_guarded(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(None).cast("bigint").alias("doc_a"),
         F.lit(None).cast("bigint").alias("doc_b"),
         F.lit(None).cast("double").alias("jaccard"),
-        "band",
+        F.col("band").cast("bigint").alias("band"),
         "bucket_pop",
     )
     return pairs.unionByName(report)
@@ -704,14 +674,7 @@ def ext_shingle_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = _CONTAIN_T
     d = load(spark, sf_dir, "documents")
     sh = shingle_rows(d).localCheckpoint(eager=False)
-    doc_freq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
-    rare_first = Window.partitionBy("doc_id").orderBy("df", "shingle")
-    prefix = (
-        sh.join(doc_freq, "shingle")
-        .withColumn("rnk", F.row_number().over(rare_first))
-        .where(F.col("rnk") <= F.col("n_sh") - F.ceil(F.col("n_sh") * t) + 1)
-        .select("doc_id", "shingle")
-    )
+    prefix = rare_first_prefix(sh, t).select("doc_id", "shingle")
     full = sh.select(F.col("doc_id").alias("doc_dst"), "shingle")
     cand = (
         prefix.withColumnRenamed("doc_id", "doc_src")

@@ -40,9 +40,5 @@ from pyspark.sql import functions as F
 def by_key(df: DataFrame, *cols: str) -> DataFrame:
     """Repartition scan-stage ``df`` by ``cols`` at CPU-driven parallelism."""
     sc = df.sparkSession.sparkContext
-    n = sc.defaultParallelism
-    try:
-        n = max(n, df.rdd.getNumPartitions())
-    except Exception:
-        pass  # parallelism floor still applies
+    n = max(sc.defaultParallelism, df.rdd.getNumPartitions())
     return df.repartition(n, *[F.col(c) for c in cols])

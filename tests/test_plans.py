@@ -366,6 +366,22 @@ def test_ngram_dedup_prefix_is_checkpointed(spark):
     assert "row_number" not in plan
 
 
+def test_minhash_guarded_reads_checkpointed_signatures(spark):
+    """ext_dedup_minhash_guarded builds its signatures with
+    minhash_signatures, which checkpoints them: the executed plan scans
+    them as a materialized RDD leaf and holds no inline md5 band hash —
+    otherwise the signature aggregation would run once per consumer
+    branch (bucket populations, both self-join sides)."""
+    plan = (
+        QUERIES["ext_dedup_minhash_guarded"](spark, SF_DIR)
+        ._jdf.queryExecution()
+        .executedPlan()
+        .toString()
+    )
+    assert "ExistingRDD" in plan
+    assert "md5(" not in plan
+
+
 def test_minhash_calibration_broadcasts_only_candidates(spark):
     """r13 verdict "What's wrong" #1: the exact-verify side of
     ext_minhash_calibration must carry exactly ONE explicit broadcast hint —

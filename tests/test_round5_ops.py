@@ -132,11 +132,14 @@ class TestGuardedMinhash:
 
     def test_matches_unguarded_when_no_hot_buckets(self, spark):
         """On the real (non-boilerplate) testdata the guard is a no-op:
-        pair rows == ext_dedup_minhash_verified's rows."""
+        pair rows == ext_dedup_minhash_verified's rows. The production
+        xxhash64 query (ext_dedup_minhash_native) finds the same verified
+        pairs, which ties its values to the oracle-checked twin."""
         from tests.conftest import SF_DIR
 
         guarded = QUERIES["ext_dedup_minhash_guarded"](spark, SF_DIR).toPandas()
         base = QUERIES["ext_dedup_minhash_verified"](spark, SF_DIR).toPandas()
+        native = QUERIES["ext_dedup_minhash_native"](spark, SF_DIR).toPandas()
         g = sorted(
             map(
                 tuple,
@@ -148,6 +151,15 @@ class TestGuardedMinhash:
         b = sorted(map(tuple, base[["doc_a", "doc_b"]].astype(int).values.tolist()))
         assert g == b
         assert len(guarded[guarded.kind == "hot_band"]) == 0
+
+        def rows(df):
+            return sorted(
+                (int(a), int(b), float(j))
+                for a, b, j in df[["doc_a", "doc_b", "jaccard"]].values.tolist()
+            )
+
+        assert len(b) > 0
+        assert rows(native) == rows(base)
 
 
 class TestBloomDecontaminate:
